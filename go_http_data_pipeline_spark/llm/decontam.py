@@ -418,7 +418,7 @@ def streaming_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..streaming.core import _docs_sharded_dir
+    from ..streaming.core import drive_arrivals
 
     bench = (
         shingles_cached(spark, sf_dir)
@@ -454,20 +454,7 @@ def streaming_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"b{batch_id}")
         )
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-    q = (
-        docs.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drive_arrivals(spark, sf_dir, "documents", gate, work)
     out = (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(out_dir)

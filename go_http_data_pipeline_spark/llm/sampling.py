@@ -453,16 +453,19 @@ def streaming_priority_sample_state(
     import shutil
     import tempfile
 
-    from ..streaming.annindex import _newest_state, _newest_state_id
-    from ..streaming.core import _docs_sharded_dir
+    from ..streaming.core import (
+        drive_arrivals,
+        newest_state,
+        newest_state_id,
+        write_state,
+    )
 
     work = tempfile.mkdtemp(prefix="prisample_")
     state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir, exist_ok=True)
     cols = ("doc_id", "weight", "priority")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if _newest_state_id(state_dir) >= batch_id:
+        if newest_state_id(state_dir) >= batch_id:
             return  # crash between state write and commit: fixpoint
         u = (
             md5_int(F.concat(F.lit("pri:"), F.col("doc_id").cast("string")))
@@ -478,33 +481,13 @@ def streaming_priority_sample_state(
                 ),
             )
         ).select(*cols)
-        prior = _newest_state(spark, state_dir)
+        prior = newest_state(spark, state_dir)
         if prior is not None:
             cand = cand.unionByName(prior.select(*cols))
-        out = os.path.join(state_dir, f"s{batch_id}")
-        _priority_merge(cand).select(*cols).write.mode("overwrite").parquet(
-            out
-        )
-        for e in os.scandir(state_dir):
-            if e.name.startswith("s") and e.name != f"s{batch_id}":
-                if int(e.name[1:]) < batch_id:
-                    shutil.rmtree(e.path, ignore_errors=True)
+        write_state(_priority_merge(cand).select(*cols), state_dir, batch_id)
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-    q = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = _newest_state(spark, state_dir)
+    drive_arrivals(spark, sf_dir, "documents", fold, work)
+    final = newest_state(spark, state_dir)
     out = (
         _priority_rank_est(final.select(*cols)).localCheckpoint()
         if final is not None
@@ -658,7 +641,7 @@ def epoch_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The cap enforced AT INGEST: documents arrive in micro-batches and
 # the engine maintains, per host, the best-HOST_CAP-so-far set as a
 # generational state (the s{batch_id} discipline of
-# streaming/annindex.py). The fold is "top-CAP per host of
+# streaming/core.py's write_state). The fold is "top-CAP per host of
 # (prior state UNION batch's own top-CAP)" — associative, idempotent
 # (a replayed batch's rows are already in the state and deduplicate
 # away), and ORDER-INSENSITIVE, so the final state provably equals
@@ -717,45 +700,30 @@ def streaming_host_cap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..streaming.annindex import _newest_state, _newest_state_id
-    from ..streaming.core import _docs_sharded_dir
+    from ..streaming.core import (
+        drive_arrivals,
+        newest_state,
+        newest_state_id,
+        write_state,
+    )
 
     work = tempfile.mkdtemp(prefix="hostcap_")
     state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir, exist_ok=True)
     cols = ("source", "doc_id", "n_chars", "src_rank")
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if _newest_state_id(state_dir) >= batch_id:
+        if newest_state_id(state_dir) >= batch_id:
             return  # crash between state write and commit: fixpoint
         cand = _hostcap_merge(
             batch_df.select("source", "doc_id", "n_chars")
         ).select(*cols)
-        prior = _newest_state(spark, state_dir)
+        prior = newest_state(spark, state_dir)
         if prior is not None:
             cand = cand.unionByName(prior.select(*cols))
-        out = os.path.join(state_dir, f"s{batch_id}")
-        _hostcap_merge(cand).select(*cols).write.mode("overwrite").parquet(out)
-        for e in os.scandir(state_dir):
-            if e.name.startswith("s") and e.name != f"s{batch_id}":
-                if int(e.name[1:]) < batch_id:
-                    shutil.rmtree(e.path, ignore_errors=True)
+        write_state(_hostcap_merge(cand).select(*cols), state_dir, batch_id)
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-    q = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = _newest_state(spark, state_dir)
+    drive_arrivals(spark, sf_dir, "documents", fold, work)
+    final = newest_state(spark, state_dir)
     out = (
         final.select(*cols).localCheckpoint()
         if final is not None

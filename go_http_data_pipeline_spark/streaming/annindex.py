@@ -33,7 +33,6 @@ docs/SCALING_MEASURED.md §F.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
 
@@ -50,25 +49,15 @@ from ..llm.similarity import (
     _NORMS_SQL,
 )
 from ..registry import query
-from .genindex import GenIndex
+from .core import drive_arrivals, newest_state, newest_state_id, write_state
+from .genindex import GenIndex, _stamped
 
 # Fold the per-batch cell dirs into one bucketed generation every this
 # many appends (see GenIndex / SCALING_MEASURED.md §F for why).
 _IVF_COMPACT_EVERY = 4
 _IVF_BUCKETS = 8
-# Arrival count for the gate query: the embeddings fixture split into
-# this many micro-batches.
-_IVF_ARRIVALS = 4
 
 _STATE_COLS = ("vec_id", "cid", "neighbor_id", "cosine")
-
-
-def _stamped(feats: DataFrame, batch_id: int) -> DataFrame:
-    """Index rows stamped with their arrival batch so retractions can
-    be last-writer-wins (a re-add in a later batch outlives an earlier
-    delete — GenIndex.apply_tombstones); dead weight until a delete
-    batch exists, exactly as the LSH band index stamps its rows."""
-    return feats.withColumn("src_batch", F.lit(batch_id).cast("long"))
 
 
 def _ivf_index(index_dir: str) -> GenIndex:
@@ -79,17 +68,6 @@ def _ivf_index(index_dir: str) -> GenIndex:
         prefix="ivf_gen",
         tombstone_cols=("vec_id",),
     )
-
-
-def _ivf_probe_sides(
-    spark: SparkSession, index_dir: str
-) -> list[DataFrame]:
-    """The read view as join-ready sides with live tombstones applied
-    (retractions not yet folded by a compaction) — a pure passthrough
-    when none exist, so delete-free plans are untouched; the same
-    discipline as ``_lsh_probe_sides`` (streaming/core.py)."""
-    idx = _ivf_index(index_dir)
-    return [idx.apply_tombstones(spark, s) for s in idx.probe_sides(spark)]
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,32 +115,6 @@ def ivf_batch_feats(batch_df: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _newest_state_id(state_dir: str) -> int:
-    """Id of the newest COMPLETE (``_SUCCESS`` present) state
-    generation, or -1 before the first batch. Crash-safe the same way
-    the index read view is: an interrupted state write has no
-    ``_SUCCESS`` and is invisible; the replay overwrites it."""
-    if not os.path.isdir(state_dir):
-        return -1
-    best = -1
-    for e in os.scandir(state_dir):
-        m = re.fullmatch(r"s(\d+)", e.name)
-        if (
-            m
-            and e.is_dir()
-            and os.path.exists(os.path.join(e.path, "_SUCCESS"))
-        ):
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def _newest_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    best = _newest_state_id(state_dir)
-    if best < 0:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"s{best}"))
-
-
 def _merge_top1(candidates: DataFrame) -> DataFrame:
     """Keep each vector's best challenger: max cosine, ties to the
     smaller neighbor_id. Associative and idempotent — merge order and
@@ -203,14 +155,14 @@ def ivf_index_step(
     reading it as the prior state (Spark forbids
     overwrite-while-read); the index append still replays
     idempotently below."""
-    if _newest_state_id(state_dir) >= batch_id:
-        idx = _ivf_index(index_dir)
+    idx = _ivf_index(index_dir)
+    if newest_state_id(state_dir) >= batch_id:
         idx.append(_stamped(batch_feats, batch_id), batch_id)
         if idx.pending_appends() >= _IVF_COMPACT_EVERY:
             idx.compact(spark, batch_id)
         return
     feats = batch_feats.persist()
-    sides = _ivf_probe_sides(spark, index_dir)
+    sides = idx.live_sides(spark)
 
     def directional(joined: DataFrame) -> DataFrame:
         """Both directions of one (new, old) cell collision."""
@@ -265,47 +217,14 @@ def ivf_index_step(
     )
     challengers = wb if challengers is None else challengers.unionByName(wb)
 
-    prior = _newest_state(spark, state_dir)
+    prior = newest_state(spark, state_dir)
     if prior is not None:
         challengers = challengers.unionByName(prior.select(*_STATE_COLS))
-    merged = _merge_top1(challengers)
-    out = os.path.join(state_dir, f"s{batch_id}")
-    merged.write.mode("overwrite").parquet(out)
-    # GC superseded state generations — best-effort, after the new
-    # one's _SUCCESS landed; readers never see a partial view.
-    for e in os.scandir(state_dir):
-        m = re.fullmatch(r"s(\d+)", e.name)
-        if m and int(m.group(1)) < batch_id:
-            shutil.rmtree(e.path, ignore_errors=True)
-
-    idx = _ivf_index(index_dir)
+    write_state(_merge_top1(challengers), state_dir, batch_id)
     idx.append(_stamped(feats, batch_id), batch_id)
     feats.unpersist()
     if idx.pending_appends() >= _IVF_COMPACT_EVERY:
         idx.compact(spark, batch_id)
-
-
-# Per-(app, sf_dir) memo of the multi-file staging of embeddings (one
-# fixture file = one micro-batch; incremental indexing needs several).
-_EMB_SHARDS: dict = {}
-
-
-def _emb_sharded_dir(
-    spark: SparkSession, sf_dir: str, n: int = _IVF_ARRIVALS
-) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    d = _EMB_SHARDS.get(key)
-    if d and os.path.isdir(d):
-        return d
-    d = tempfile.mkdtemp(prefix="emb_shards_")
-    (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(n, "vec_id")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _EMB_SHARDS[key] = d
-    return d
 
 
 def _ivf_stream_oracle(delete_mod: int | None = None) -> str:
@@ -348,6 +267,17 @@ def _ivf_stream_oracle(delete_mod: int | None = None) -> str:
     """
 
 
+def _final_state(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The newest top-1 state generation, lineage severed from the
+    work dir about to be removed; empty before the first batch."""
+    final = newest_state(spark, state_dir)
+    if final is None:
+        return spark.createDataFrame(
+            [], "vec_id long, cid long, neighbor_id long, cosine double"
+        )
+    return final.select(*_STATE_COLS).localCheckpoint()
+
+
 @query("streaming_ivf_index_top1", oracle=_ivf_stream_oracle())
 def streaming_ivf_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF ANN index maintenance: embeddings arrive in
@@ -370,19 +300,10 @@ def streaming_ivf_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="ivf_inc_")
     index_dir = os.path.join(work, "index")
     state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir, exist_ok=True)
     cents = ivf_centroids(spark, sf_dir).persist()
     cents.count()
 
-    emb = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_emb_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         ivf_index_step(
             spark,
             ivf_batch_feats(batch_df, cents),
@@ -391,21 +312,8 @@ def streaming_ivf_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_dir,
         )
 
-    q = (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = _newest_state(spark, state_dir)
-    out = (
-        final.select(*_STATE_COLS).localCheckpoint()
-        if final is not None
-        else spark.createDataFrame(
-            [], "vec_id long, cid long, neighbor_id long, cosine double"
-        )
-    )
+    drive_arrivals(spark, sf_dir, "embeddings", step, work)
+    out = _final_state(spark, state_dir)
     cents.unpersist()
     _ivf_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
@@ -453,9 +361,9 @@ def ivf_delete_step(
     control-plane — the repair cost is O(affected x cell)."""
     idx = _ivf_index(index_dir)
     idx.append_tombstones(vec_ids, batch_id)
-    if _newest_state_id(state_dir) >= batch_id:
+    if newest_state_id(state_dir) >= batch_id:
         return  # crash between state write and commit: fixpoint
-    prior = _newest_state(spark, state_dir)
+    prior = newest_state(spark, state_dir)
     if prior is None:
         return
     dead = vec_ids.select("vec_id").distinct()
@@ -468,7 +376,7 @@ def ivf_delete_step(
         F.broadcast(dead_nb), "neighbor_id", "left_semi"
     ).select("vec_id")
 
-    sides = _ivf_probe_sides(spark, index_dir)
+    sides = idx.live_sides(spark)
     feat_cols = ("vec_id", "cid", "embedding", "nrm")
     aff_feats = None
     for side in sides:
@@ -497,12 +405,7 @@ def ivf_delete_step(
     new_state = unaffected
     if repaired is not None:
         new_state = new_state.unionByName(_merge_top1(repaired))
-    out = os.path.join(state_dir, f"s{batch_id}")
-    new_state.write.mode("overwrite").parquet(out)
-    for e in os.scandir(state_dir):
-        m = re.fullmatch(r"s(\d+)", e.name)
-        if m and int(m.group(1)) < batch_id:
-            shutil.rmtree(e.path, ignore_errors=True)
+    write_state(new_state, state_dir, batch_id)
 
 
 @query(
@@ -527,20 +430,10 @@ def streaming_ivf_index_with_deletes(
     work = tempfile.mkdtemp(prefix="ivf_del_")
     index_dir = os.path.join(work, "index")
     state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir, exist_ok=True)
     cents = ivf_centroids(spark, sf_dir).persist()
     cents.count()
-    seen: list[int] = []
 
-    emb = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_emb_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         ivf_index_step(
             spark,
             ivf_batch_feats(batch_df, cents),
@@ -548,17 +441,9 @@ def streaming_ivf_index_with_deletes(
             index_dir,
             state_dir,
         )
-        seen.append(batch_id)
 
-    q = (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    delete_batch = max(seen, default=-1) + 1
+    ran = drive_arrivals(spark, sf_dir, "embeddings", step, work)
+    delete_batch = max(ran, default=-1) + 1
     deleted = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _IVF_DELETE_MOD == 0)
@@ -568,14 +453,7 @@ def streaming_ivf_index_with_deletes(
     # Fold the retraction in physically; the repaired state is the
     # answer either way (logical==physical is unit-pinned).
     _ivf_index(index_dir).compact(spark, delete_batch)
-    final = _newest_state(spark, state_dir)
-    out = (
-        final.select(*_STATE_COLS).localCheckpoint()
-        if final is not None
-        else spark.createDataFrame(
-            [], "vec_id long, cid long, neighbor_id long, cosine double"
-        )
-    )
+    out = _final_state(spark, state_dir)
     cents.unpersist()
     _ivf_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)

@@ -70,7 +70,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..llm.sampling import HOST_CAP, _host_caps_oracle
-from .genindex import GenIndex
+from .core import drive_arrivals
+from .genindex import GenIndex, _stamped
 
 # Fold the per-batch dirs into one bucketed generation every this many
 # appends (see GenIndex / SCALING_MEASURED.md §F for why).
@@ -136,12 +137,7 @@ def cap_index_step(
     partial+final WindowGroupLimit shape the read plan is pinned to
     (tests/test_capindex.py::test_read_plan_contracts)."""
     idx = _cap_index(index_dir, store)
-    idx.append(
-        batch_docs.select(*_IDX_COLS).withColumn(
-            "src_batch", F.lit(batch_id).cast("long")
-        ),
-        batch_id,
-    )
+    idx.append(_stamped(batch_docs.select(*_IDX_COLS), batch_id), batch_id)
     if idx.pending_appends() >= _CAP_COMPACT_EVERY:
         idx.compact(spark, batch_id)
 
@@ -220,41 +216,6 @@ def _caps_from_sides(
     return kept.join(audit, "source")
 
 
-def _run_arrivals(
-    spark: SparkSession, sf_dir: str, work: str, store=None
-) -> tuple[str, list[int]]:
-    """Drive the sharded documents fixture through the engine
-    (availableNow, one shard per micro-batch) into a fresh index;
-    returns (index_dir, seen batch ids). ``store`` selects the index
-    control plane (None -> Posix)."""
-    from .core import _docs_sharded_dir
-
-    index_dir = os.path.join(work, "index")
-    seen: list[int] = []
-
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cap_index_step(spark, batch_df, batch_id, index_dir, store)
-        seen.append(batch_id)
-
-    q = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return index_dir, seen
-
-
 def streaming_host_cap_index(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -266,7 +227,12 @@ def streaming_host_cap_index(
     ``host_document_caps`` answer EXACTLY — shared oracle
     (``_CAP_STREAM_ORACLE``)."""
     work = tempfile.mkdtemp(prefix="cap_inc_")
-    index_dir, _ = _run_arrivals(spark, sf_dir, work)
+    index_dir = os.path.join(work, "index")
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        cap_index_step(spark, batch_df, batch_id, index_dir)
+
+    drive_arrivals(spark, sf_dir, "documents", step, work)
     out = _caps_from_index(spark, index_dir).localCheckpoint()
     _cap_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
@@ -287,8 +253,13 @@ def streaming_host_cap_index_with_deletes(
     outcome the lossy ``streaming_host_cap_state`` fold structurally
     cannot produce (its evictees are gone from state)."""
     work = tempfile.mkdtemp(prefix="cap_del_")
-    index_dir, seen = _run_arrivals(spark, sf_dir, work)
-    delete_batch = max(seen, default=-1) + 1
+    index_dir = os.path.join(work, "index")
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        cap_index_step(spark, batch_df, batch_id, index_dir)
+
+    ran = drive_arrivals(spark, sf_dir, "documents", step, work)
+    delete_batch = max(ran, default=-1) + 1
     dead = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % _CAP_DELETE_MOD == 0)

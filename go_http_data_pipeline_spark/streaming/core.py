@@ -16,6 +16,11 @@ consumed forever (``Server/main.go:329-336``) with a 1 rec/sec client
   testable. At production scale the same plans run with processing-
   time triggers and kafka/file sinks — the trigger is config, not
   code.
+* ``drive_arrivals``    — the arrival loop every incremental index
+  and ingest-time fold shares: a sharded fixture replayed one shard
+  per micro-batch through a caller's ``foreachBatch`` step, plus the
+  ``s{N}`` state-generation helpers (``newest_state_id`` /
+  ``newest_state`` / ``write_state``) the stateful steps fold into.
 * ``foreach_batch_merge`` — T5/T4: the salary-writeback pattern as an
   idempotent per-batch MERGE: Spark's checkpointed replay +
   deterministic merge upgrades the reference's at-most-once loop to
@@ -31,13 +36,17 @@ Spark design point.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..determinism import dsum, dsum_sql
 from ..registry import query
+from .genindex import GenIndex, _stamped
 
 EVENTS_DDL = (
     "event_id long, ts long, user_id long, event_type string,"
@@ -128,6 +137,117 @@ def run_to_memory(
     )
     q.awaitTermination()
     return spark.table(name)
+
+
+# The fixtures an arrival stream replays: table -> (shard key, stream
+# schema). Each fixture is ONE parquet file = one micro-batch, so it is
+# staged as _N_SHARDS files, one micro-batch each.
+_ARRIVAL_TABLES = {
+    "documents": (
+        "doc_id",
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ),
+    "embeddings": ("vec_id", "vec_id long, embedding array<float>, label int"),
+}
+_N_SHARDS = 4
+# Per-(app, sf_dir, table) memo of the sharded staging.
+_SHARDS: dict = {}
+
+
+def _sharded_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    key = (spark.sparkContext.applicationId, sf_dir, table)
+    d = _SHARDS.get(key)
+    if d and os.path.isdir(d):
+        return d
+    d = tempfile.mkdtemp(prefix=f"{table}_shards_")
+    (
+        spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        .repartition(_N_SHARDS, _ARRIVAL_TABLES[table][0])
+        .write.mode("overwrite")
+        .parquet(d)
+    )
+    _SHARDS[key] = d
+    return d
+
+
+def drive_arrivals(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    step: Callable[[DataFrame, int], None],
+    work: str,
+) -> list[int]:
+    """Replay the sharded ``table`` fixture ("documents" or
+    "embeddings") through the engine — availableNow, one shard per
+    micro-batch, checkpoint at ``work/_ckpt`` — calling
+    ``step(batch_df, batch_id)`` per micro-batch. Returns the batch
+    ids this call ran, in order: ``[]`` when nothing new arrived
+    (an empty source, or a rerun over an already-committed
+    checkpoint), so a follow-on delete batch is
+    ``max(ids, default=-1) + 1``. Family options (e.g. an index
+    store) ride in the ``step`` closure."""
+    ran: list[int] = []
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        step(batch_df, batch_id)
+        ran.append(batch_id)
+
+    q = (
+        spark.readStream.schema(_ARRIVAL_TABLES[table][1])
+        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
+        .parquet(_sharded_dir(spark, sf_dir, table))
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(work, "_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return ran
+
+
+# State generations: a stateful step folds into ``s{batch_id}`` dirs
+# under its state dir. Readers take the newest COMPLETE generation
+# (``_SUCCESS`` present), so an interrupted write is invisible and a
+# replay overwrites its own generation; a step whose generation is
+# already complete (crash between the state write and the engine
+# commit) is at its fixpoint and skips the fold.
+
+
+def newest_state_id(state_dir: str) -> int:
+    """Id of the newest COMPLETE state generation, or -1 before the
+    first batch."""
+    if not os.path.isdir(state_dir):
+        return -1
+    best = -1
+    for e in os.scandir(state_dir):
+        m = re.fullmatch(r"s(\d+)", e.name)
+        if (
+            m
+            and e.is_dir()
+            and os.path.exists(os.path.join(e.path, "_SUCCESS"))
+        ):
+            best = max(best, int(m.group(1)))
+    return best
+
+
+def newest_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    best = newest_state_id(state_dir)
+    if best < 0:
+        return None
+    return spark.read.parquet(os.path.join(state_dir, f"s{best}"))
+
+
+def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Write generation ``s{batch_id}``, then GC the older ones —
+    best-effort, after the new ``_SUCCESS`` landed, so readers never
+    see a partial view."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(state_dir, f"s{batch_id}")
+    )
+    for e in os.scandir(state_dir):
+        m = re.fullmatch(r"s(\d+)", e.name)
+        if m and int(m.group(1)) < batch_id:
+            shutil.rmtree(e.path, ignore_errors=True)
 
 
 def foreach_batch_merge(
@@ -605,28 +725,6 @@ def _lsh_index_oracle() -> str:
     """
 
 
-# Per-(app, sf_dir) memo of the multi-file staging of documents (the
-# fixture is ONE parquet file = one micro-batch; incremental indexing
-# needs several).
-_DOC_SHARDS: dict = {}
-
-
-def _docs_sharded_dir(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    d = _DOC_SHARDS.get(key)
-    if d and os.path.isdir(d):
-        return d
-    d = tempfile.mkdtemp(prefix="docs_shards_")
-    (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .repartition(n, "doc_id")
-        .write.mode("overwrite")
-        .parquet(d)
-    )
-    _DOC_SHARDS[key] = d
-    return d
-
-
 # Fold the per-batch band dirs into one compacted generation every
 # this many appends: without it the index accumulates one directory
 # per micro-batch forever (hourly arrivals for a year = ~9k dirs of
@@ -642,9 +740,7 @@ _LSH_COMPACT_EVERY = 4
 _LSH_INDEX_BUCKETS = 8
 
 
-def _lsh_index(index_dir: str) -> "GenIndex":
-    from .genindex import GenIndex
-
+def _lsh_index(index_dir: str) -> GenIndex:
     return GenIndex(
         index_dir,
         bucket_cols=("band", "sig"),
@@ -652,44 +748,6 @@ def _lsh_index(index_dir: str) -> "GenIndex":
         prefix="lsh_gen",
         tombstone_cols=("doc_id",),
     )
-
-
-def _lsh_gen_table(index_dir: str, batch_id: int) -> str:
-    """Catalog name for a compacted generation (see GenIndex.gen_table)."""
-    return _lsh_index(index_dir).gen_table(batch_id)
-
-
-def lsh_drop_generations(spark: SparkSession, index_dir: str) -> None:
-    """Drop every catalog entry this index registered (cleanup when
-    the index itself is discarded; the data dirs are the caller's)."""
-    _lsh_index(index_dir).drop_generations(spark)
-
-
-def lsh_visible_dirs(index_dir: str) -> list[str]:
-    """The read view of the band index: the newest COMPLETE compacted
-    generation plus newer per-batch dirs (see GenIndex.visible_dirs
-    for the crash-safety argument)."""
-    return _lsh_index(index_dir).visible_dirs()
-
-
-def _lsh_probe_sides(spark: SparkSession, index_dir: str) -> list[DataFrame]:
-    """The read view as join-ready sides: the compacted generation via
-    its BUCKETED catalog table (probe joins consume its (band, sig)
-    distribution — zero index-side exchange), the newer delta dirs as
-    one plain parquet read (see GenIndex.probe_sides). Live
-    tombstones (retractions not yet folded by a compaction) are
-    applied on every side — with none on disk this is a pure
-    passthrough, so the delete-free queries' plans are untouched."""
-    idx = _lsh_index(index_dir)
-    return [idx.apply_tombstones(spark, s) for s in idx.probe_sides(spark)]
-
-
-def lsh_compact(spark: SparkSession, index_dir: str, batch_id: int) -> None:
-    """Fold the read view into ONE bucketed generation keyed by the
-    high-water batch id (see GenIndex.compact for the crash-safety
-    ordering). The generational machinery is shared with the IVF ANN
-    cell index (streaming/annindex.py) via streaming/genindex.py."""
-    _lsh_index(index_dir).compact(spark, batch_id)
 
 
 def lsh_index_step(
@@ -730,7 +788,8 @@ def lsh_index_step(
     # index side — and a union with the unbucketed delta dirs would
     # erase that partitioning. Union-of-joins == join-of-unions here
     # (the join is a plain equi-collision probe).
-    for side in _lsh_probe_sides(spark, index_dir):
+    idx = _lsh_index(index_dir)
+    for side in idx.live_sides(spark):
         # doc_id inequality makes a REPLAYED batch idempotent: after a
         # crash between the index append and the engine's commit, the
         # replay probes an index already holding this batch's own
@@ -752,24 +811,10 @@ def lsh_index_step(
     pairs.distinct().write.mode("overwrite").parquet(
         os.path.join(cand_dir, f"b{batch_id}")
     )
-    # Rows are stamped with their arrival batch so retractions can be
-    # last-writer-wins (a re-add in a later batch outlives an earlier
-    # delete — GenIndex.apply_tombstones); stamp is dead weight until
-    # a delete batch exists.
-    bands.withColumn("src_batch", F.lit(batch_id).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(index_dir, f"b{batch_id}"))
+    idx.append(_stamped(bands, batch_id), batch_id)
     bands.unpersist()
-    # Compact once enough per-batch dirs accumulate. Counting the
-    # VIEW's b-dirs (not raw dirs) keeps a replay idempotent: a
-    # recreated-but-superseded b-dir never re-triggers a fold.
-    n_b = sum(
-        1
-        for p in lsh_visible_dirs(index_dir)
-        if os.path.basename(p).startswith("b")
-    )
-    if n_b >= _LSH_COMPACT_EVERY:
-        lsh_compact(spark, index_dir, batch_id)
+    if idx.pending_appends() >= _LSH_COMPACT_EVERY:
+        idx.compact(spark, batch_id)
 
 
 @query("streaming_lsh_index_candidates", oracle=_lsh_index_oracle())
@@ -794,7 +839,7 @@ def streaming_lsh_index_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     probe is an equi-join on (band, sig). Per batch, only the NEW
     docs' bands shuffle; nothing corpus-sized is recomputed as the
     corpus grows. Every ``_LSH_COMPACT_EVERY`` appends the per-batch
-    dirs fold into one generation (``lsh_compact``) — a BUCKETED
+    dirs fold into one generation (``GenIndex.compact``) — a BUCKETED
     catalog table keyed by (band, sig) — so the file count a probe
     lists/opens stays bounded instead of growing one dir per
     micro-batch forever (measured in docs/SCALING_MEASURED.md §F),
@@ -802,37 +847,21 @@ def streaming_lsh_index_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     the index side — the one that grows with the corpus — never
     shuffles (plan-pinned by
     test_lsh_compacted_probe_has_no_index_side_exchange)."""
-    import shutil
-
     work = tempfile.mkdtemp(prefix="lsh_inc_")
     index_dir = os.path.join(work, "index")
     cand_dir = os.path.join(work, "cands")
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         lsh_index_step(spark, batch_df, batch_id, index_dir, cand_dir)
 
-    q = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drive_arrivals(spark, sf_dir, "documents", step, work)
     out = (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(cand_dir)
         .distinct()
         .localCheckpoint()  # sever lineage from the temp dirs
     )
-    lsh_drop_generations(spark, index_dir)
+    _lsh_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
     return out
 
@@ -871,7 +900,7 @@ def lsh_live_pairs(spark: SparkSession, index_dir: str) -> DataFrame:
     offline full-index derivation (a one-shot self-join across the
     read view), not the per-batch probe — it exists so retractions
     have an auditable 'what does the index answer NOW' surface."""
-    sides = _lsh_probe_sides(spark, index_dir)
+    sides = _lsh_index(index_dir).live_sides(spark)
     if not sides:
         return spark.createDataFrame([], "doc_a long, doc_b long")
     rows = sides[0].select("band", "sig", "doc_id")
@@ -921,34 +950,15 @@ def streaming_lsh_index_with_deletes(
     a plain filter. Logical-vs-physical apply equality, last-writer-
     wins re-adds, and replayed-delete idempotence are unit-pinned in
     tests/test_streaming.py."""
-    import shutil
-
     work = tempfile.mkdtemp(prefix="lsh_del_")
     index_dir = os.path.join(work, "index")
     cand_dir = os.path.join(work, "cands")
-    seen: list[int] = []
 
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, n_chars long"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_docs_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         lsh_index_step(spark, batch_df, batch_id, index_dir, cand_dir)
-        seen.append(batch_id)
 
-    q = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    delete_batch = max(seen) + 1
+    ran = drive_arrivals(spark, sf_dir, "documents", step, work)
+    delete_batch = max(ran, default=-1) + 1
     deleted = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % _DELETE_MOD == 0)
@@ -958,9 +968,10 @@ def streaming_lsh_index_with_deletes(
     # Fold the retraction in physically; the returned pairs read the
     # post-compaction generation (the logical-apply path gives the
     # same answer — unit-pinned equality).
-    lsh_compact(spark, index_dir, delete_batch)
+    idx = _lsh_index(index_dir)
+    idx.compact(spark, delete_batch)
     out = lsh_live_pairs(spark, index_dir).localCheckpoint()
-    lsh_drop_generations(spark, index_dir)
+    idx.drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
     return out
 

@@ -2,10 +2,12 @@
 maintained probe indexes (the MinHash-LSH band index in
 ``streaming/core.py``, the IVF ANN cell index in
 ``streaming/annindex.py``, the IVFPQ codes index in
-``streaming/pqindex.py``, and the SemDeDup cell index in
-``streaming/semindex.py``).
+``streaming/pqindex.py``, the SemDeDup cell index in
+``streaming/semindex.py``, and the host-cap index in
+``streaming/capindex.py``). All five are fed by the one arrival
+loop, ``streaming.core.drive_arrivals``.
 
-The shape all four share: micro-batches append ``b{N}`` parquet dirs; the
+The shape all five share: micro-batches append ``b{N}`` parquet dirs; the
 read view is the newest COMPLETE compacted generation ``c{HW}`` plus
 every ``b{N}`` with ``N > HW``; every K appends the view folds into
 one new generation written as an external catalog table BUCKETED by
@@ -56,6 +58,16 @@ _TOMBSTONE_BROADCAST_MAX_BYTES = 8 * 1024 * 1024
 # underscore prefix keeps Spark's file listing from reading it as
 # data.
 _SCHEMA_SIDECAR = "_schema.json"
+
+
+def _stamped(rows: DataFrame, batch_id: int) -> DataFrame:
+    """Index rows stamped with their arrival batch (``src_batch``) so
+    retractions can be last-writer-wins — a re-add in a later batch
+    outlives an earlier delete (:meth:`GenIndex.apply_tombstones`).
+    Dead weight until a delete batch exists."""
+    from pyspark.sql import functions as F
+
+    return rows.withColumn("src_batch", F.lit(batch_id).cast("long"))
 
 
 def _gen_number(path: str) -> int | None:
@@ -263,10 +275,7 @@ class GenIndex:
     def live_sides(self, spark: SparkSession) -> list[DataFrame]:
         """``probe_sides`` with live tombstones applied (retractions
         not yet folded by a compaction) — a pure passthrough when none
-        exist, so delete-free plans are untouched. The per-family
-        ``_lsh_probe_sides`` / ``_ivf_probe_sides`` wrappers predate
-        this method and can fold into it when their modules next
-        change."""
+        exist, so delete-free plans are untouched."""
         sized = self._sized_tombstone_dirs()
         return [
             self.apply_tombstones(spark, s, _sized=sized)

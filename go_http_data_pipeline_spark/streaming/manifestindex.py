@@ -61,6 +61,7 @@ toward its 100 TB object-store deployment story.
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 import tempfile
@@ -74,9 +75,10 @@ from .capindex import (
     _CAP_STREAM_ORACLE,
     _cap_index,
     _caps_from_sides,
-    _run_arrivals,
     cap_delete_step,
+    cap_index_step,
 )
+from .core import drive_arrivals
 from .genindex import GenIndex
 from .indexstore import ManifestIndexStore
 
@@ -115,9 +117,14 @@ def _run_with_takedown(
     ``_CAP_DELETE_MOD``-th document and fold the takedown in via the
     manifest swap. Returns (index, pre-delete manifest version)."""
     store = ManifestIndexStore()
-    index_dir, seen = _run_arrivals(spark, sf_dir, work, store)
+    index_dir = os.path.join(work, "index")
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        cap_index_step(spark, batch_df, batch_id, index_dir, store)
+
+    ran = drive_arrivals(spark, sf_dir, "documents", step, work)
     v_pre = store.current_version(index_dir)
-    delete_batch = max(seen, default=-1) + 1
+    delete_batch = max(ran, default=-1) + 1
     dead = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % _CAP_DELETE_MOD == 0)

@@ -53,13 +53,9 @@ from ..llm.pq import (
 )
 from ..llm.similarity import N_QUERIES, ivf_assign_cached
 from ..registry import query
-from .annindex import (
-    _emb_sharded_dir,
-    _stamped,
-    ivf_batch_feats,
-    ivf_centroids,
-)
-from .genindex import GenIndex
+from .annindex import ivf_batch_feats, ivf_centroids
+from .core import drive_arrivals
+from .genindex import GenIndex, _stamped
 
 # Fold the per-batch dirs into one (cid)-bucketed generation every
 # this many appends (see GenIndex for the crash-safety ordering).
@@ -98,12 +94,6 @@ def pq_index_step(
     idx.append(_stamped(wide.join(cells, "vec_id"), batch_id), batch_id)
     if idx.pending_appends() >= _PQ_COMPACT_EVERY:
         idx.compact(spark, batch_id)
-
-
-def _pq_probe_sides(spark: SparkSession, index_dir: str) -> list[DataFrame]:
-    """The read view as join-ready sides with live tombstones applied
-    — see ``GenIndex.live_sides``."""
-    return _pq_index(index_dir).live_sides(spark)
 
 
 def pq_delete_step(vec_ids: DataFrame, batch_id: int, index_dir: str) -> None:
@@ -193,46 +183,6 @@ def ivfpq_probe(
     )
 
 
-def _run_arrivals(
-    spark: SparkSession, sf_dir: str, work: str, index_dir: str
-) -> int:
-    """Build the codes index by streaming the sharded embeddings
-    fixture through the engine (availableNow, one shard per
-    micro-batch), quantizing each batch against the FIXED offline
-    codebooks. Shared by the gate query and the retraction twin so
-    the arrival loop exists once. Returns the last arrival's batch id
-    (-1 if the stream produced no micro-batches)."""
-    cents = ivf_centroids(spark, sf_dir).persist()
-    cents.count()
-    codebook = trained_codebook(spark, sf_dir)
-    code_ids = dense_code_ids(spark, sf_dir)
-    seen: list[int] = []
-
-    emb = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_emb_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pq_index_step(
-            spark, batch_df, cents, codebook, code_ids, batch_id, index_dir
-        )
-        seen.append(batch_id)
-
-    q = (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cents.unpersist()
-    return max(seen, default=-1)
-
-
 @query("streaming_ivfpq_index_top1", oracle=_IVF_PQ_TOP1_ORACLE)
 def streaming_ivfpq_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVFPQ index maintenance: embeddings arrive in
@@ -246,9 +196,20 @@ def streaming_ivfpq_index_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_pq_ann_top1`` (shared oracle)."""
     work = tempfile.mkdtemp(prefix="ivfpq_inc_")
     index_dir = os.path.join(work, "index")
-    _run_arrivals(spark, sf_dir, work, index_dir)
+    cents = ivf_centroids(spark, sf_dir).persist()
+    cents.count()
+    codebook = trained_codebook(spark, sf_dir)
+    code_ids = dense_code_ids(spark, sf_dir)
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        pq_index_step(
+            spark, batch_df, cents, codebook, code_ids, batch_id, index_dir
+        )
+
+    drive_arrivals(spark, sf_dir, "embeddings", step, work)
+    cents.unpersist()
     out = ivfpq_probe(
-        spark, sf_dir, _pq_probe_sides(spark, index_dir)
+        spark, sf_dir, _pq_index(index_dir).live_sides(spark)
     ).localCheckpoint()
     _pq_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
@@ -306,7 +267,19 @@ def streaming_ivfpq_index_with_deletes(
     held under tools/check_held.py (see comment above)."""
     work = tempfile.mkdtemp(prefix="ivfpq_del_")
     index_dir = os.path.join(work, "index")
-    delete_batch = _run_arrivals(spark, sf_dir, work, index_dir) + 1
+    cents = ivf_centroids(spark, sf_dir).persist()
+    cents.count()
+    codebook = trained_codebook(spark, sf_dir)
+    code_ids = dense_code_ids(spark, sf_dir)
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        pq_index_step(
+            spark, batch_df, cents, codebook, code_ids, batch_id, index_dir
+        )
+
+    ran = drive_arrivals(spark, sf_dir, "embeddings", step, work)
+    cents.unpersist()
+    delete_batch = max(ran, default=-1) + 1
     deleted = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _IVFPQ_DELETE_MOD == 0)
@@ -319,7 +292,7 @@ def streaming_ivfpq_index_with_deletes(
     out = ivfpq_probe(
         spark,
         sf_dir,
-        _pq_probe_sides(spark, index_dir),
+        _pq_index(index_dir).live_sides(spark),
         q_filter=F.col("vec_id") % _IVFPQ_DELETE_MOD != 0,
     ).localCheckpoint()
     _pq_index(index_dir).drop_generations(spark)

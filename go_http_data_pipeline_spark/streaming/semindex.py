@@ -59,7 +59,6 @@ dedup ops; this extends the beyond-reference curation surface
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
 
@@ -69,8 +68,8 @@ from pyspark.sql import functions as F
 from ..llm.clustering import _Q
 from ..llm.semdedup import _NORM2, TAU, _seed_best_expr, _verdicts_oracle
 from ..registry import query
-from .annindex import _emb_sharded_dir, _newest_state_id
-from .genindex import GenIndex
+from .core import drive_arrivals, newest_state, newest_state_id, write_state
+from .genindex import GenIndex, _stamped
 
 # Fold the per-batch cell dirs into one bucketed generation every this
 # many appends (see GenIndex / SCALING_MEASURED.md §F for why).
@@ -103,14 +102,6 @@ def _sem_index(index_dir: str) -> GenIndex:
     )
 
 
-def _sem_probe_sides(spark: SparkSession, index_dir: str) -> list[DataFrame]:
-    """The read view as join-ready sides with live tombstones applied —
-    pure passthrough when none exist (the ``_ivf_probe_sides``
-    discipline)."""
-    idx = _sem_index(index_dir)
-    return [idx.apply_tombstones(spark, s) for s in idx.probe_sides(spark)]
-
-
 def sem_batch_feats(
     spark: SparkSession, batch_df: DataFrame, sf_dir: str
 ) -> DataFrame:
@@ -131,10 +122,6 @@ def sem_batch_feats(
         "q",
         F.expr(_NORM2).alias("nrm2"),
     )
-
-
-def _stamped(feats: DataFrame, batch_id: int) -> DataFrame:
-    return feats.withColumn("src_batch", F.lit(batch_id).cast("long"))
 
 
 def _sem_pairs(new: DataFrame, old: DataFrame) -> DataFrame:
@@ -183,27 +170,6 @@ def _sem_pairs(new: DataFrame, old: DataFrame) -> DataFrame:
     )
 
 
-def _newest_pairs(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    best = _newest_state_id(state_dir)
-    if best < 0:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"s{best}"))
-
-
-def _write_state(pairs: DataFrame, state_dir: str, batch_id: int) -> None:
-    """``s{batch_id}`` + ``_SUCCESS`` then GC of superseded
-    generations — the crash-safe state discipline every streaming
-    index family shares (readers take the newest COMPLETE generation;
-    an interrupted write is invisible; a replay overwrites)."""
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"s{batch_id}")
-    )
-    for e in os.scandir(state_dir):
-        m = re.fullmatch(r"s(\d+)", e.name)
-        if m and int(m.group(1)) < batch_id:
-            shutil.rmtree(e.path, ignore_errors=True)
-
-
 def sem_index_step(
     spark: SparkSession,
     batch_feats: DataFrame,
@@ -226,21 +192,21 @@ def sem_index_step(
     fixpoint, and re-merging would overwrite ``s{batch_id}`` while
     reading it (the ``ivf_index_step`` guard)."""
     idx = _sem_index(index_dir)
-    if _newest_state_id(state_dir) >= batch_id:
+    if newest_state_id(state_dir) >= batch_id:
         idx.append(_stamped(batch_feats, batch_id), batch_id)
         if idx.pending_appends() >= _SEM_COMPACT_EVERY:
             idx.compact(spark, batch_id)
         return
     feats = batch_feats.persist()
     new_pairs = _sem_pairs(feats, feats)
-    for side in _sem_probe_sides(spark, index_dir):
+    for side in idx.live_sides(spark):
         new_pairs = new_pairs.unionByName(
             _sem_pairs(feats, side.select(*_FEAT_COLS))
         )
-    prior = _newest_pairs(spark, state_dir)
+    prior = newest_state(spark, state_dir)
     if prior is not None:
         new_pairs = new_pairs.unionByName(prior.select(*_PAIR_COLS))
-    _write_state(new_pairs.distinct(), state_dir, batch_id)
+    write_state(new_pairs.distinct(), state_dir, batch_id)
     idx.append(_stamped(feats, batch_id), batch_id)
     feats.unpersist()
     if idx.pending_appends() >= _SEM_COMPACT_EVERY:
@@ -265,9 +231,9 @@ def sem_delete_step(
     ``s{batch_id}`` fixpoint guard."""
     idx = _sem_index(index_dir)
     idx.append_tombstones(vec_ids, batch_id)
-    if _newest_state_id(state_dir) >= batch_id:
+    if newest_state_id(state_dir) >= batch_id:
         return
-    prior = _newest_pairs(spark, state_dir)
+    prior = newest_state(spark, state_dir)
     if prior is None:
         return
     dead = vec_ids.select("vec_id").distinct()
@@ -280,7 +246,7 @@ def sem_delete_step(
         "vec_b",
         "left_anti",
     )
-    _write_state(survivors.select(*_PAIR_COLS), state_dir, batch_id)
+    write_state(survivors.select(*_PAIR_COLS), state_dir, batch_id)
 
 
 def _verdicts_from_state(
@@ -292,14 +258,14 @@ def _verdicts_from_state(
     with the arrived-vector set read from the index's own live rows
     (tombstones applied — a retracted vector gets no verdict row)."""
     arrived = None
-    for side in _sem_probe_sides(spark, index_dir):
+    for side in _sem_index(index_dir).live_sides(spark):
         s = side.select("vec_id", "cid")
         arrived = s if arrived is None else arrived.unionByName(s)
     if arrived is None:
         return spark.createDataFrame(
             [], "vec_id long, cid long, n_neardups bigint, keep boolean"
         )
-    pairs = _newest_pairs(spark, state_dir)
+    pairs = newest_state(spark, state_dir)
     if pairs is None:
         return arrived.distinct().select(
             "vec_id",
@@ -336,45 +302,6 @@ def _verdicts_from_state(
     )
 
 
-def _run_arrivals(
-    spark: SparkSession, sf_dir: str, work: str
-) -> tuple[str, str, list[int]]:
-    """Drive the sharded embeddings fixture through the engine
-    (availableNow, one shard per micro-batch) into a fresh index +
-    pair state; returns (index_dir, state_dir, seen batch ids)."""
-    index_dir = os.path.join(work, "index")
-    state_dir = os.path.join(work, "state")
-    os.makedirs(state_dir, exist_ok=True)
-    seen: list[int] = []
-
-    emb = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)  # one shard per micro-batch
-        .parquet(_emb_sharded_dir(spark, sf_dir))
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sem_index_step(
-            spark,
-            sem_batch_feats(spark, batch_df, sf_dir),
-            batch_id,
-            index_dir,
-            state_dir,
-        )
-        seen.append(batch_id)
-
-    q = (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(work, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return index_dir, state_dir, seen
-
-
 @query("streaming_semdedup_verdicts", oracle=_SEM_STREAM_ORACLE)
 def streaming_semdedup_verdicts(
     spark: SparkSession, sf_dir: str
@@ -389,7 +316,19 @@ def streaming_semdedup_verdicts(
     batch ``semantic_dedup_verdicts`` answer EXACTLY — shared oracle
     (``_SEM_STREAM_ORACLE``)."""
     work = tempfile.mkdtemp(prefix="sem_inc_")
-    index_dir, state_dir, _ = _run_arrivals(spark, sf_dir, work)
+    index_dir = os.path.join(work, "index")
+    state_dir = os.path.join(work, "state")
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        sem_index_step(
+            spark,
+            sem_batch_feats(spark, batch_df, sf_dir),
+            batch_id,
+            index_dir,
+            state_dir,
+        )
+
+    drive_arrivals(spark, sf_dir, "embeddings", step, work)
     out = _verdicts_from_state(spark, index_dir, state_dir).localCheckpoint()
     _sem_index(index_dir).drop_generations(spark)
     shutil.rmtree(work, ignore_errors=True)
@@ -412,8 +351,20 @@ def streaming_semdedup_with_deletes(
     keep=TRUE, the curation-correct outcome (its duplicate left the
     corpus)."""
     work = tempfile.mkdtemp(prefix="sem_del_")
-    index_dir, state_dir, seen = _run_arrivals(spark, sf_dir, work)
-    delete_batch = max(seen, default=-1) + 1
+    index_dir = os.path.join(work, "index")
+    state_dir = os.path.join(work, "state")
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        sem_index_step(
+            spark,
+            sem_batch_feats(spark, batch_df, sf_dir),
+            batch_id,
+            index_dir,
+            state_dir,
+        )
+
+    ran = drive_arrivals(spark, sf_dir, "embeddings", step, work)
+    delete_batch = max(ran, default=-1) + 1
     dead = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") % _SEM_DELETE_MOD == 0)

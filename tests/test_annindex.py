@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from go_http_data_pipeline_spark.streaming import annindex
+from go_http_data_pipeline_spark.streaming import annindex, core
 
 
 def _cents(spark):
@@ -35,7 +35,7 @@ def _batch(spark, rows):
 
 
 def _state(spark, state_dir):
-    df = annindex._newest_state(spark, state_dir)
+    df = core.newest_state(spark, state_dir)
     return (
         sorted(map(tuple, df.select("vec_id", "cid", "neighbor_id").collect()))
         if df is not None
@@ -242,7 +242,7 @@ def _ids_df(spark, ids):
 
 def _live_rows(spark, index_dir):
     """Union of the live probe sides (tombstones applied)."""
-    sides = annindex._ivf_probe_sides(spark, index_dir)
+    sides = annindex._ivf_index(index_dir).live_sides(spark)
     out = None
     for s in sides:
         s = s.select("vec_id", "cid")

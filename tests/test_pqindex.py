@@ -155,7 +155,7 @@ def _probe_rows(spark, sf_dir, index_dir, q_filter=None):
             pqindex.ivfpq_probe(
                 spark,
                 sf_dir,
-                pqindex._pq_probe_sides(spark, index_dir),
+                pqindex._pq_index(index_dir).live_sides(spark),
                 q_filter=q_filter,
             ).collect(),
         )
@@ -164,7 +164,7 @@ def _probe_rows(spark, sf_dir, index_dir, q_filter=None):
 
 def _live_rows(spark, index_dir):
     rows = []
-    for side in pqindex._pq_probe_sides(spark, index_dir):
+    for side in pqindex._pq_index(index_dir).live_sides(spark):
         rows.extend(
             (r.vec_id, r.cid, tuple(r.cidx)) for r in side.collect()
         )

@@ -22,6 +22,23 @@ def test_registry_loads_without_session():
     subprocess.run([sys.executable, "-c", code], check=True, timeout=120)
 
 
+def test_readme_query_counts_match_registry():
+    """README's headline counts are read from the registry, so they
+    cannot drift from it again."""
+    import re
+
+    from go_http_data_pipeline_spark import registry
+
+    with open(os.path.join(_REPO_ROOT, "README.md"), encoding="utf-8") as f:
+        readme = f.read()
+    m = re.search(r"\*\*(\d+) registered queries, (\d+) of them", readme)
+    assert m, "README headline count sentence not found"
+    assert (int(m.group(1)), int(m.group(2))) == (
+        len(registry.all_queries()),
+        len(registry.all_oracles()),
+    )
+
+
 def test_every_oracle_has_a_query():
     from go_http_data_pipeline_spark import registry
 

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_http_data_pipeline_spark.llm.semdedup import semantic_dedup_verdicts
+from go_http_data_pipeline_spark.streaming import core
 from go_http_data_pipeline_spark.streaming import semindex as si
 
 
@@ -63,7 +64,7 @@ def test_cross_batch_pair_and_verdicts(spark, tmp_path):
     work, index_dir, state_dir = _dirs(tmp_path)
     _arrive(spark, index_dir, state_dir)
     pairs = sorted(
-        map(tuple, si._newest_pairs(spark, state_dir).collect())
+        map(tuple, core.newest_state(spark, state_dir).collect())
     )
     assert pairs == [(1, 3, 0)]
     assert _verdicts(spark, work) == [
@@ -92,7 +93,7 @@ def test_replay_is_idempotent(spark, tmp_path, crash_point):
             _feats(spark, _B0), _feats(spark, _B0)
         )
         shutil.rmtree(os.path.join(state_dir, "s1"))
-        si._write_state(b0_pairs, state_dir, 0)
+        core.write_state(b0_pairs, state_dir, 0)
     si.sem_index_step(spark, _feats(spark, _B1), 1, index_dir, state_dir)
     assert _verdicts(spark, work) == want
     si._sem_index(index_dir).drop_generations(spark)
@@ -247,7 +248,7 @@ def test_sem_full_takedown_then_recompaction_and_fresh_session(
     assert _verdicts(spark, work) == []
     idx.drop_generations(spark)  # catalog-cleared session
     assert sum(
-        s.count() for s in si._sem_probe_sides(spark, index_dir)
+        s.count() for s in si._sem_index(index_dir).live_sides(spark)
     ) == 0
     assert _verdicts(spark, work) == []
     # The index keeps WORKING after the takedown: b0+b1 re-adds

@@ -751,11 +751,45 @@ def test_lsh_index_compaction_bounds_dirs_and_preserves_candidates(
     assert got == want and {(1, 21), (1, 41), (21, 41)} <= got
 
 
+def test_drive_arrivals_empty_source_runs_no_batch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An arrival stream over an empty shard directory runs no
+    micro-batch: ``drive_arrivals`` returns [], a rerun on the same work dir
+    (same checkpoint) runs none either, and a retraction twin over it
+    takes delete batch 0 instead of raising on max([])."""
+    from go_http_data_pipeline_spark.streaming import core
+
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    monkeypatch.setattr(core, "_sharded_dir", lambda *_: str(shards))
+    called = []
+    work = str(tmp_path / "work")
+    for _ in range(2):
+        ran = core.drive_arrivals(
+            spark, sf_dir, "documents", lambda df, b: called.append(b), work
+        )
+        assert ran == []
+    assert called == []
+    assert core.streaming_lsh_index_with_deletes(spark, sf_dir).count() == 0
+    # One shard lands: it runs as the next batch exactly once.
+    spark.createDataFrame(
+        [(1, "a b c", "en", "s", 5)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("append").parquet(str(shards))
+    for want in ([0], []):
+        ran = core.drive_arrivals(
+            spark, sf_dir, "documents", lambda df, b: called.append(b), work
+        )
+        assert ran == want
+    assert called == [0]
+
+
 def test_lsh_replay_after_compaction_is_idempotent(spark, tmp_path, monkeypatch):
     """Crash-replay across a fold: a batch whose bands were ALREADY
     folded into a compacted generation replays (engine crashed before
     committing). The recreated b dir sits at/below the high-water mark
-    so lsh_visible_dirs ignores it — no duplicate rows enter the read
+    so the read view ignores it — no duplicate rows enter the read
     view — and the batch's candidate output is bit-identical."""
     from go_http_data_pipeline_spark.streaming import core
 
@@ -771,13 +805,13 @@ def test_lsh_replay_after_compaction_is_idempotent(spark, tmp_path, monkeypatch)
     core.lsh_index_step(spark, docs([(1, dup)]), 0, index_dir, cand_dir)
     core.lsh_index_step(spark, docs([(2, dup)]), 1, index_dir, cand_dir)
     # Batch 1 triggered the fold: view is exactly [c1].
-    vis = core.lsh_visible_dirs(index_dir)
+    vis = core._lsh_index(index_dir).visible_dirs()
     assert [v.rsplit("/", 1)[1] for v in vis] == ["c1"]
     n_rows = spark.read.parquet(*vis).count()
 
     # Replay batch 1 (post-fold crash): b1 is recreated but superseded.
     core.lsh_index_step(spark, docs([(2, dup)]), 1, index_dir, cand_dir)
-    vis2 = core.lsh_visible_dirs(index_dir)
+    vis2 = core._lsh_index(index_dir).visible_dirs()
     assert [v.rsplit("/", 1)[1] for v in vis2] == ["c1"]
     assert spark.read.parquet(*vis2).count() == n_rows
     got = {
@@ -801,7 +835,7 @@ def test_lsh_visible_dirs_ignores_incomplete_generation(tmp_path):
     finishes on replay."""
     import os
 
-    from go_http_data_pipeline_spark.streaming.core import lsh_visible_dirs
+    from go_http_data_pipeline_spark.streaming.core import _lsh_index
 
     index = tmp_path / "index"
     for name, success in (("b2", True), ("b3", True), ("c1", True), ("c4", False)):
@@ -810,11 +844,11 @@ def test_lsh_visible_dirs_ignores_incomplete_generation(tmp_path):
         if success:
             (d / "_SUCCESS").touch()
     # c4 is incomplete -> high water is c1; b2/b3 are newer than 1.
-    got = [p.rsplit("/", 1)[1] for p in lsh_visible_dirs(str(index))]
+    got = [p.rsplit("/", 1)[1] for p in _lsh_index(str(index)).visible_dirs()]
     assert got == ["c1", "b2", "b3"]
     # Once c4 completes it supersedes everything.
     (index / "c4" / "_SUCCESS").touch()
-    got = [p.rsplit("/", 1)[1] for p in lsh_visible_dirs(str(index))]
+    got = [p.rsplit("/", 1)[1] for p in _lsh_index(str(index)).visible_dirs()]
     assert got == ["c4"]
 
 
@@ -848,9 +882,9 @@ def test_lsh_compacted_probe_has_no_index_side_exchange(
     core.lsh_index_step(spark, docs([(1, dup)]), 0, index_dir, cand_dir)
     core.lsh_index_step(spark, docs([(2, dup)]), 1, index_dir, cand_dir)
 
-    sides = core._lsh_probe_sides(spark, index_dir)
+    sides = core._lsh_index(index_dir).live_sides(spark)
     assert len(sides) == 1, "one compacted generation, no delta dirs"
-    [c_dir] = core.lsh_visible_dirs(index_dir)
+    [c_dir] = core._lsh_index(index_dir).visible_dirs()
 
     bands = lsh_bands(shingles_of(docs([(3, dup)])))
 
@@ -882,7 +916,7 @@ def test_lsh_compacted_probe_has_no_index_side_exchange(
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    core.lsh_drop_generations(spark, index_dir)
+    core._lsh_index(index_dir).drop_generations(spark)
 
 
 def test_lsh_delete_logical_equals_physical_and_gc(spark, tmp_path):
@@ -894,7 +928,6 @@ def test_lsh_delete_logical_equals_physical_and_gc(spark, tmp_path):
 
     from go_http_data_pipeline_spark.streaming.core import (
         _lsh_index,
-        lsh_compact,
         lsh_delete_step,
         lsh_index_step,
         lsh_live_pairs,
@@ -920,7 +953,7 @@ def test_lsh_delete_logical_equals_physical_and_gc(spark, tmp_path):
         map(tuple, lsh_live_pairs(spark, index_dir).collect())
     )
     assert logical == [(1, 3)]
-    lsh_compact(spark, index_dir, 2)
+    _lsh_index(index_dir).compact(spark, 2)
     physical = sorted(
         map(tuple, lsh_live_pairs(spark, index_dir).collect())
     )
@@ -990,8 +1023,6 @@ def test_lsh_full_takedown_then_recompaction_and_fresh_session(
     UNABLE_TO_INFER_SCHEMA."""
     from go_http_data_pipeline_spark.streaming.core import (
         _lsh_index,
-        _lsh_probe_sides,
-        lsh_compact,
         lsh_delete_step,
         lsh_index_step,
         lsh_live_pairs,
@@ -1010,12 +1041,12 @@ def test_lsh_full_takedown_then_recompaction_and_fresh_session(
     lsh_delete_step(
         spark, docs([(1, ""), (2, "")]).select("doc_id"), 1, index_dir
     )
-    lsh_compact(spark, index_dir, 1)  # all-dead fold -> empty generation
-    lsh_compact(spark, index_dir, 2)  # re-fold of the empty view
+    _lsh_index(index_dir).compact(spark, 1)  # all-dead fold -> empty generation
+    _lsh_index(index_dir).compact(spark, 2)  # re-fold of the empty view
     assert lsh_live_pairs(spark, index_dir).count() == 0
     _lsh_index(index_dir).drop_generations(spark)  # catalog-cleared session
     assert sum(
-        s.count() for s in _lsh_probe_sides(spark, index_dir)
+        s.count() for s in _lsh_index(index_dir).live_sides(spark)
     ) == 0
     assert lsh_live_pairs(spark, index_dir).count() == 0
     # The index keeps WORKING after the takedown: re-adds pair again.

@@ -618,7 +618,7 @@ def _lsh_incremental_race(spark):
         """Parquet files the NEXT probe will list/open (the read view)."""
         return sum(
             sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-            for d in core.lsh_visible_dirs(index_dir)
+            for d in core._lsh_index(index_dir).visible_dirs()
         )
 
     # Incremental: one lsh_index_step per arrival (single-shot times —
@@ -1124,7 +1124,7 @@ def _codes_retraction_race(spark):
         ivf_assign_cached,
     )
     from go_http_data_pipeline_spark.streaming import pqindex as pqi
-    from go_http_data_pipeline_spark.streaming.annindex import _stamped
+    from go_http_data_pipeline_spark.streaming.genindex import _stamped
 
     base = pqm._codes_wide_cached(spark, BIG).join(
         ivf_assign_cached(spark, BIG), "vec_id"
@@ -1211,6 +1211,7 @@ def _sem_retraction_race(spark):
     from pyspark.sql import functions as F
 
     from go_http_data_pipeline_spark.streaming import semindex as si
+    from go_http_data_pipeline_spark.streaming.core import newest_state
 
     _build_inc_embs(spark)
     dead = spark.range(100, 100 + RETRACT_DELETES).withColumnRenamed(
@@ -1249,7 +1250,7 @@ def _sem_retraction_race(spark):
             return si._verdicts_from_state(spark, index_dir, state_dir)
 
         n_vecs = verdicts().count()
-        pairs_before = si._newest_pairs(spark, state_dir).count()
+        pairs_before = newest_state(spark, state_dir).count()
         t_free = _timed(verdicts)
         t0 = time.perf_counter()
         si.sem_delete_step(spark, dead, len(batches), index_dir, state_dir)
@@ -1267,7 +1268,7 @@ def _sem_retraction_race(spark):
         assert all(r[0] not in dead_ids for r in live_rows), (
             "retracted vector kept a verdict row"
         )
-        pairs_dropped = pairs_before - si._newest_pairs(
+        pairs_dropped = pairs_before - newest_state(
             spark, state_dir
         ).count()
         # The delete modulus is chosen so the takedown removes REAL
@@ -1592,6 +1593,7 @@ def _ivf_incremental_race(spark):
     from pyspark.sql import functions as F
 
     from go_http_data_pipeline_spark.streaming import annindex as ai
+    from go_http_data_pipeline_spark.streaming.core import newest_state
 
     _build_inc_embs(spark)
     shards = [
@@ -1657,7 +1659,7 @@ def _ivf_incremental_race(spark):
                 times.append(round(time.perf_counter() - t0, 2))
         finally:
             ai._IVF_COMPACT_EVERY = prev
-        final = ai._newest_state(spark, state_dir)
+        final = newest_state(spark, state_dir)
         rows = sorted(map(tuple, final.select(*ai._STATE_COLS).collect()))
         ai._ivf_index(index_dir).drop_generations(spark)
         shutil.rmtree(work, ignore_errors=True)
