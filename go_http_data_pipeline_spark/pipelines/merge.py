@@ -12,11 +12,20 @@ At 100 TB this runs inside ``foreachBatch`` against a partitioned
 table, rewriting only the partitions that contain matched keys
 (partition pruning on the anti-join side); with a table format that
 supports MERGE INTO the same plan maps 1:1 onto it.
+
+A stream sink cannot assume one row per key per batch, so
+:func:`merge_latest` is the streaming sibling: one keyed aggregate
+over base + batch that keeps each key's last writer and refuses rows
+with a NULL key (``streaming.core.foreach_batch_merge``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+_ORDER = "__merge_order"
+_LATEST = "__merge_latest"
 
 
 def merge_into(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
@@ -51,9 +60,43 @@ def apply_cdc(
     a delete costs the same as an update — no tombstone scan.
 
     The CDC feed must hold at most one row per key (standard MERGE
-    precondition; a multi-row feed is compacted upstream to its latest
-    image per key before the merge).
+    precondition; a multi-row feed is first compacted to its latest
+    image per key, the last-writer-wins aggregate of
+    :func:`merge_latest` that the streaming sink runs).
     """
     kept = base.join(cdc.select(key), on=key, how="left_anti")
     upserts = cdc.filter(cdc[op_col] != "D").drop(op_col)
     return kept.unionByName(upserts, allowMissingColumns=True)
+
+
+def merge_latest(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
+    """Upsert ``updates`` into ``base`` by ``key``, last writer wins.
+
+    Unlike :func:`merge_into`, ``updates`` may repeat a key: its last
+    row in arrival order wins, as the reference's sequence of
+    ``UPDATE ... WHERE id=?`` calls leaves it (``Server/main.go:280``).
+    Arrival order is ``monotonically_increasing_id()`` — partition
+    index, then position — which is the order a source's partitions
+    yield their records: log order for ``httpjson`` (one partition
+    per ``url`` micro-batch; ``spool`` plans (file, range) in order),
+    but not for a file source, which packs files by size. Update rows
+    with a NULL key are refused (a malformed request stores nothing,
+    ``Server/main.go:104-107``).
+
+    One union, one ``groupBy(key)`` keeping ``max_by(row, order)``
+    with every base row at order -1: ``updates`` is scanned once and
+    there is one shuffle. The kept row is a struct of the base's
+    columns, so the result keeps the base's column order. ``base``
+    must hold one row per key; schemas must match by name.
+    """
+    latest = (
+        base.withColumn(_ORDER, F.lit(-1).cast("long"))
+        .unionByName(
+            updates.filter(F.col(key).isNotNull()).withColumn(
+                _ORDER, F.monotonically_increasing_id()
+            )
+        )
+        .groupBy(key)
+        .agg(F.max_by(F.struct(*base.columns), _ORDER).alias(_LATEST))
+    )
+    return latest.select(f"{_LATEST}.*")

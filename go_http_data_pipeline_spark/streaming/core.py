@@ -22,8 +22,9 @@ consumed forever (``Server/main.go:329-336``) with a 1 rec/sec client
   ``s{N}`` state-generation helpers (``newest_state_id`` /
   ``newest_state`` / ``write_state``) the stateful steps fold into.
 * ``foreach_batch_merge`` — T5/T4: the salary-writeback pattern as an
-  idempotent per-batch MERGE: Spark's checkpointed replay +
-  deterministic merge upgrades the reference's at-most-once loop to
+  idempotent per-batch upsert (read → last-writer-wins aggregate →
+  write → two renames): Spark's checkpointed replay + deterministic
+  merge upgrades the reference's at-most-once loop to
   effectively-once. Non-atomicity of the parquet overwrite is
   documented (a table format with MERGE INTO makes it atomic).
 
@@ -43,6 +44,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..determinism import dsum, dsum_sql
 from ..registry import query
@@ -250,6 +252,22 @@ def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
             shutil.rmtree(e.path, ignore_errors=True)
 
 
+# Per table path: the stamp of the directory foreach_batch_merge last
+# swapped in, and the schema it wrote there. While the stamp holds, the
+# next batch reads the base with that schema and skips Spark's parquet
+# schema-inference job (~80 ms a batch); any other writer changes the
+# stamp, and the base is read with inference again.
+_WRITTEN: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _dir_stamp(path: str) -> tuple:
+    """Directory inode plus (name, size, mtime) of every entry."""
+    entries = sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(path)
+    )
+    return os.stat(path).st_ino, tuple(entries)
+
+
 def foreach_batch_merge(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -257,10 +275,16 @@ def foreach_batch_merge(
     key: str,
     checkpoint_dir: str | None = None,
 ):
-    """T5: keyed write-back sink. Each micro-batch MERGEs into the
-    parquet table at ``base_path`` (read → left-anti → union → write
-    to a staging dir → two directory renames). The merge is
-    idempotent for a replayed batch, so checkpoint + replay gives
+    """T5: keyed write-back sink. Each micro-batch upserts into the
+    parquet table at ``base_path`` (read → last-writer-wins aggregate
+    → write to a staging dir → two directory renames). The aggregate
+    (``pipelines.merge.merge_latest``) reads the batch once, keeps
+    one row per key — the batch's last writer of it, else the base
+    row — and refuses records whose key is NULL, which is what a
+    malformed line decodes to. While the table directory is as the
+    sink left it, the base is read with the schema last written
+    there, without a schema-inference job. The aggregate is
+    deterministic for a replayed batch, so checkpoint + replay gives
     effectively-once — the upgrade over the reference's
     skip-on-failure loop (T4). The swap is two ``os.rename`` calls,
     not a second full Spark write of the table (which would double
@@ -270,10 +294,7 @@ def foreach_batch_merge(
     format (Delta/Iceberg MERGE INTO) is the truly-atomic production
     drop-in.
     """
-    import os
-    import shutil
-
-    from ..pipelines.merge import merge_into
+    from ..pipelines.merge import merge_latest
 
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="fbm_ckpt_")
 
@@ -291,12 +312,16 @@ def foreach_batch_merge(
             os.rename(old, base_path)
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        base = spark.read.parquet(base_path)
-        merged = merge_into(base, batch_df, key=key)
+        written = _WRITTEN.pop(base_path, None)
+        reader = spark.read
+        if written is not None and written[0] == _dir_stamp(base_path):
+            reader = reader.schema(written[1])
+        merged = merge_latest(reader.parquet(base_path), batch_df, key=key)
         merged.write.mode("overwrite").parquet(tmp)
         os.rename(base_path, old)
         os.rename(tmp, base_path)
         shutil.rmtree(old, ignore_errors=True)
+        _WRITTEN[base_path] = (_dir_stamp(base_path), merged.schema)
 
     return (
         stream_df.writeStream.foreachBatch(_merge)

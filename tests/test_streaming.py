@@ -113,6 +113,96 @@ def test_foreach_batch_merge_recovers_from_mid_swap_crash(spark):
         assert final == {(1, 100), (2, 999), (3, 300), (4, 400)}
 
 
+def test_foreach_batch_merge_last_writer_wins_across_partitions(spark):
+    """One spool micro-batch cut into two partitions by ``split_size``:
+    key 1 repeats across the partition boundary and key 3 within the
+    second partition, and one line is malformed. The table must hold
+    one row per key, the later writer's, and no NULL-key row; replaying
+    the same batch on a fresh checkpoint must leave it identical."""
+    import json
+
+    from go_http_data_pipeline_spark.sources.http_json import (
+        _SpoolStreamReader,
+        register,
+    )
+    from go_http_data_pipeline_spark.streaming.core import foreach_batch_merge
+
+    ddl = "id long, salary long"
+    lines = [
+        {"id": 1, "salary": 100},
+        {"id": 2, "salary": 200},
+        '{"id": 5, "sal',  # malformed: decodes to an all-null row
+        {"id": 1, "salary": 111},
+        {"id": 3, "salary": 300},
+        {"id": 3, "salary": 333},
+    ]
+    with tempfile.TemporaryDirectory() as tmp:
+        base_path = os.path.join(tmp, "employee")
+        spark.createDataFrame([(1, 1), (4, 40)], ddl).write.parquet(base_path)
+        spool = os.path.join(tmp, "spool")
+        os.makedirs(spool)
+        with open(os.path.join(spool, "f0.jsonl"), "w") as fh:
+            for r in lines:
+                fh.write((r if isinstance(r, str) else json.dumps(r)) + "\n")
+
+        schema = spark.createDataFrame([], ddl).schema
+        reader = _SpoolStreamReader(schema, spool, 3)
+        assert len(reader.partitions(reader.initialOffset(), reader.latestOffset())) == 2
+
+        register(spark)
+
+        def run(ckpt: str) -> tuple[list[tuple], list[int]]:
+            sdf = (
+                spark.readStream.format("httpjson").schema(ddl)
+                .option("spool", spool).option("split_size", 3).load()
+            )
+            q = foreach_batch_merge(
+                spark, sdf, base_path, key="id",
+                checkpoint_dir=os.path.join(tmp, ckpt),
+            )
+            q.awaitTermination()
+            rows = spark.read.parquet(base_path).collect()
+            scanned = [p.numInputRows for p in q.recentProgress if p.numInputRows]
+            return sorted((tuple(r) for r in rows), key=repr), scanned
+
+        merged, scanned = run("ckpt")
+        assert merged == [(1, 111), (2, 200), (3, 333), (4, 40)]
+        assert scanned == [6]  # one micro-batch, its records read once
+        assert run("ckpt_replay") == (merged, scanned)
+
+
+def test_foreach_batch_merge_rereads_schema_after_outside_write(spark):
+    """The sink reads the base with the schema it last wrote only while
+    the directory is as it left it. A table rewritten from outside with
+    an extra column must be read with that column: a stale schema would
+    drop it from every row."""
+    from go_http_data_pipeline_spark.streaming.core import foreach_batch_merge
+
+    with tempfile.TemporaryDirectory() as tmp:
+        base_path = os.path.join(tmp, "employee")
+        upd_dir = os.path.join(tmp, "updates")
+
+        def merge(rows, ddl, ckpt):
+            spark.createDataFrame(rows, ddl).write.mode("overwrite").parquet(upd_dir)
+            updates = spark.readStream.schema(ddl).parquet(upd_dir)
+            foreach_batch_merge(
+                spark, updates, base_path, key="id",
+                checkpoint_dir=os.path.join(tmp, ckpt),
+            ).awaitTermination()
+            return {tuple(r) for r in spark.read.parquet(base_path).collect()}
+
+        spark.createDataFrame([(1, 100)], "id long, salary long").write.parquet(base_path)
+        assert merge([(2, 200)], "id long, salary long", "c0") == {(1, 100), (2, 200)}
+
+        wide = "id long, salary long, dept string"
+        spark.createDataFrame(
+            [(1, 100, "a"), (2, 200, "b")], wide
+        ).write.mode("overwrite").parquet(base_path)
+        assert merge([(3, 300, "c")], wide, "c1") == {
+            (1, 100, "a"), (2, 200, "b"), (3, 300, "c")
+        }
+
+
 def test_rate_user_stream_schema_and_determinism(spark):
     from go_http_data_pipeline_spark.streaming.core import rate_user_stream
 
