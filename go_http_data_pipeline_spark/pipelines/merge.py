@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _ORDER = "__merge_order"
+_ROW = "__merge_row"
 _LATEST = "__merge_latest"
 
 
@@ -83,11 +84,14 @@ def merge_latest(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     with a NULL key are refused (a malformed request stores nothing,
     ``Server/main.go:104-107``).
 
-    One union, one ``groupBy(key)`` keeping ``max_by(row, order)``
-    with every base row at order -1: ``updates`` is scanned once and
-    there is one shuffle. The kept row is a struct of the base's
-    columns, so the result keeps the base's column order. ``base``
-    must hold one row per key; schemas must match by name.
+    One union, one ``groupBy(key)`` keeping ``max(struct(order,
+    row))`` with every base row at order -1: ``updates`` is scanned
+    once and there is one shuffle. Orders tie only among base rows,
+    when the base repeats a key or holds NULL-key rows (tables written
+    before the sink refused them do); the row's values then decide, so
+    every run keeps the same row. The row is a struct of the base's
+    columns, so the result keeps the base's column order; schemas must
+    match by name, and the columns must be orderable (no map type).
     """
     latest = (
         base.withColumn(_ORDER, F.lit(-1).cast("long"))
@@ -97,6 +101,10 @@ def merge_latest(base: DataFrame, updates: DataFrame, key: str) -> DataFrame:
             )
         )
         .groupBy(key)
-        .agg(F.max_by(F.struct(*base.columns), _ORDER).alias(_LATEST))
+        .agg(
+            F.max(
+                F.struct(F.col(_ORDER), F.struct(*base.columns).alias(_ROW))
+            ).alias(_LATEST)
+        )
     )
-    return latest.select(f"{_LATEST}.*")
+    return latest.select(f"{_LATEST}.{_ROW}.*")

@@ -44,7 +44,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..determinism import dsum, dsum_sql
 from ..registry import query
@@ -252,22 +251,6 @@ def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
             shutil.rmtree(e.path, ignore_errors=True)
 
 
-# Per table path: the stamp of the directory foreach_batch_merge last
-# swapped in, and the schema it wrote there. While the stamp holds, the
-# next batch reads the base with that schema and skips Spark's parquet
-# schema-inference job (~80 ms a batch); any other writer changes the
-# stamp, and the base is read with inference again.
-_WRITTEN: dict[str, tuple[tuple, StructType]] = {}
-
-
-def _dir_stamp(path: str) -> tuple:
-    """Directory inode plus (name, size, mtime) of every entry."""
-    entries = sorted(
-        (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(path)
-    )
-    return os.stat(path).st_ino, tuple(entries)
-
-
 def foreach_batch_merge(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -281,10 +264,8 @@ def foreach_batch_merge(
     (``pipelines.merge.merge_latest``) reads the batch once, keeps
     one row per key — the batch's last writer of it, else the base
     row — and refuses records whose key is NULL, which is what a
-    malformed line decodes to. While the table directory is as the
-    sink left it, the base is read with the schema last written
-    there, without a schema-inference job. The aggregate is
-    deterministic for a replayed batch, so checkpoint + replay gives
+    malformed line decodes to. The aggregate is deterministic for a
+    replayed batch, so checkpoint + replay gives
     effectively-once — the upgrade over the reference's
     skip-on-failure loop (T4). The swap is two ``os.rename`` calls,
     not a second full Spark write of the table (which would double
@@ -312,16 +293,11 @@ def foreach_batch_merge(
             os.rename(old, base_path)
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        written = _WRITTEN.pop(base_path, None)
-        reader = spark.read
-        if written is not None and written[0] == _dir_stamp(base_path):
-            reader = reader.schema(written[1])
-        merged = merge_latest(reader.parquet(base_path), batch_df, key=key)
+        merged = merge_latest(spark.read.parquet(base_path), batch_df, key=key)
         merged.write.mode("overwrite").parquet(tmp)
         os.rename(base_path, old)
         os.rename(tmp, base_path)
         shutil.rmtree(old, ignore_errors=True)
-        _WRITTEN[base_path] = (_dir_stamp(base_path), merged.schema)
 
     return (
         stream_df.writeStream.foreachBatch(_merge)

@@ -87,3 +87,26 @@ def test_latest_keeps_base_column_order_with_key_not_first(spark):
         "string", "bigint", "bigint"
     ]
     assert _rows(out) == {("a", 1, 100), ("b2", 2, 999), ("c", 3, 300)}
+
+
+@pytest.mark.parametrize("slices", [1, 3])
+def test_latest_base_ties_are_broken_by_row_values(spark, slices):
+    """A base that repeats a key or holds several NULL-key rows (a table
+    written before the sink refused them) keeps the same row per key
+    whatever the base's row order or partitioning; a replay of the batch
+    on the result leaves it unchanged."""
+    rows = [(1, 100), (None, None), (1, 150), (2, 200), (None, None)]
+    updates = spark.createDataFrame([(2, 222)], "id long, salary long")
+    outs = []
+    for order in (rows, rows[::-1]):
+        base = spark.createDataFrame(
+            spark.sparkContext.parallelize(order, slices), "id long, salary long"
+        )
+        out = merge_latest(base, updates, key="id")
+        assert sorted(out.collect(), key=repr) == sorted(
+            merge_latest(out, updates, key="id").collect(), key=repr
+        )
+        outs.append(sorted(out.collect(), key=repr))
+    assert outs[0] == outs[1]
+    assert {tuple(r) for r in outs[0]} == {(1, 150), (2, 222), (None, None)}
+    assert len(outs[0]) == 3

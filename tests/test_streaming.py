@@ -171,38 +171,6 @@ def test_foreach_batch_merge_last_writer_wins_across_partitions(spark):
         assert run("ckpt_replay") == (merged, scanned)
 
 
-def test_foreach_batch_merge_rereads_schema_after_outside_write(spark):
-    """The sink reads the base with the schema it last wrote only while
-    the directory is as it left it. A table rewritten from outside with
-    an extra column must be read with that column: a stale schema would
-    drop it from every row."""
-    from go_http_data_pipeline_spark.streaming.core import foreach_batch_merge
-
-    with tempfile.TemporaryDirectory() as tmp:
-        base_path = os.path.join(tmp, "employee")
-        upd_dir = os.path.join(tmp, "updates")
-
-        def merge(rows, ddl, ckpt):
-            spark.createDataFrame(rows, ddl).write.mode("overwrite").parquet(upd_dir)
-            updates = spark.readStream.schema(ddl).parquet(upd_dir)
-            foreach_batch_merge(
-                spark, updates, base_path, key="id",
-                checkpoint_dir=os.path.join(tmp, ckpt),
-            ).awaitTermination()
-            return {tuple(r) for r in spark.read.parquet(base_path).collect()}
-
-        spark.createDataFrame([(1, 100)], "id long, salary long").write.parquet(base_path)
-        assert merge([(2, 200)], "id long, salary long", "c0") == {(1, 100), (2, 200)}
-
-        wide = "id long, salary long, dept string"
-        spark.createDataFrame(
-            [(1, 100, "a"), (2, 200, "b")], wide
-        ).write.mode("overwrite").parquet(base_path)
-        assert merge([(3, 300, "c")], wide, "c1") == {
-            (1, 100, "a"), (2, 200, "b"), (3, 300, "c")
-        }
-
-
 def test_rate_user_stream_schema_and_determinism(spark):
     from go_http_data_pipeline_spark.streaming.core import rate_user_stream
 
